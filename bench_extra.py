@@ -2,9 +2,9 @@
 noop-sink isolation timing for the frozen ``bench.py`` query set.
 
 ``bench.py`` is frozen for measurement, so every extra instrument lives
-here. This module rebuilds the SAME query DataFrames bench.py materializes
-(same inputs, same operators, same parameters) but returns them lazily so
-we can:
+here. The query DataFrames come from ``bench.bench_queries`` itself, run
+with ``bench.materialize`` swapped for a capturing function, so they are
+exactly the frames bench.py times. That lets us:
 
 - ``--explain``: write ``.explain("formatted")`` for each query to
   ``plans/r06/<query>_<tag>.txt`` (the judge-checkable plan evidence);
@@ -26,117 +26,28 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
-
-import __spark_entry__ as E  # noqa: E402
 import bench as B  # noqa: E402
-from linref_spark.events import modify as MOD  # noqa: E402
-from linref_spark.events.constrain import split_at_locs  # noqa: E402
-from linref_spark.events.frame import add_event_id  # noqa: E402
-from linref_spark.relate import agg as AGG  # noqa: E402
-from linref_spark.relate.distribute import distribute  # noqa: E402
-from linref_spark.relate.join import intersect_pairs, overlay_pairs  # noqa: E402
 from linref_spark.session import get_spark  # noqa: E402
-from linref_spark.web import dedup as DD  # noqa: E402
-from linref_spark.web.pages import generate_pages, geocode_pages, with_extracted_text  # noqa: E402
 
-SF_DIR = B.SF_DIR
 CPUS = B.CPUS
-PAGES_ROWS = B.PAGES_ROWS
-BINNED = B.BINNED
 
 
 def query_frames(spark):
-    """Dict of name -> zero-arg callable returning the query DataFrame.
+    """Dict of name -> zero-arg callable returning the DataFrame that
+    bench.py materializes for that query."""
+    queries = B.bench_queries(spark)
 
-    Mirrors bench.bench_queries exactly, but lazily (no materialize)."""
-    rp = (lambda df: df) if B.MULT == 1 else (lambda df: df.repartition(CPUS * 2))
-    seg1 = rp(B._scaled_seg(spark, 1)).localCheckpoint()
-    seg2 = rp(B._scaled_seg(spark, 2)).localCheckpoint()
-    pts = rp(B._scaled_pts(spark)).localCheckpoint()
-    docs = B._scaled_docs(spark).repartition(CPUS * 2).localCheckpoint()
-    emb = rp(B._scaled_emb(spark)).localCheckpoint()
-    dim = len(emb.select("embedding").first()[0])
-    emb_queries = emb.where(
-        (F.col("vec_id") % 500 == 0) & (F.col("vec_id") < 1_000_000)
-    )
+    def capture(run):
+        frames = []
+        materialize, B.materialize = B.materialize, frames.append
+        try:
+            run()
+        finally:
+            B.materialize = materialize
+        (df,) = frames
+        return df
 
-    from linref_spark.web import ann as ANN
-
-    _ivf_C = ANN.train_ivf_centroids(emb, dim, n_centroids=32, sample_size=4000)
-    _pq_B = ANN.train_pq_codebooks(emb, dim, m=8, n_codes=64, sample_size=4000)
-
-    def f_pages():
-        from linref_spark.geometry.udfs import add_geom_m
-        from linref_spark.lrs import LRS
-        from linref_spark.spatial.join import project_points_broadcast
-        from linref_spark.spatial.tiles import tile_aggregate, with_point_tile
-
-        pages = generate_pages(spark, PAGES_ROWS, n_partitions=CPUS * 4)
-        extracted = with_extracted_text(pages)
-        geo = geocode_pages(extracted, n_routes=100, route_length=100.0)
-        rlrs = LRS(key_cols=("route_id",), beg_col="beg", end_col="end")
-        routes = spark.range(100).select(
-            F.concat(F.lit("R"), F.lpad(F.col("id").cast("string"), 4, "0")).alias("route_id"),
-            F.lit(0.0).alias("beg"), F.lit(100.0).alias("end"),
-            F.array(F.lit(0.0), F.lit(60.0), F.lit(100.0)).alias("geom_xs"),
-            F.transform(
-                F.array(F.lit(0.0), F.lit(1.0), F.lit(2.0)),
-                lambda v: v + F.col("id").cast("double") * 5.0,
-            ).alias("geom_ys"),
-        )
-        routes = add_geom_m(add_event_id(routes, rlrs), rlrs)
-        pts_g = geo.select(
-            F.xxhash64("url").alias("event_id"),
-            F.col("loc_mp").alias("x"),
-            (
-                F.substring("route_id", 2, 4).cast("double") * 5.0
-                + F.col("loc_mp") / 100.0 * 2.0
-            ).alias("y"),
-            (F.col("extracted_text") == F.col("text")).alias("_audit"),
-        )
-        snapped = project_points_broadcast(routes, pts_g, rlrs, buffer=5.0, res=8)
-        return tile_aggregate(with_point_tile(snapped, "x", "y", res=8))
-
-    return {
-        "count_overlaps_equi": lambda: AGG.agg_count(
-            intersect_pairs(seg1, seg2, E.SEG_LRS, E.SEG_LRS), seg1, out_col="n"
-        ),
-        "count_overlaps_binned": lambda: AGG.agg_count(
-            intersect_pairs(seg1, seg2, E.SEG_LRS, E.SEG_LRS, strategy=BINNED),
-            seg1, out_col="n",
-        ),
-        "overlay_sum_binned": lambda: AGG.agg_sum(
-            overlay_pairs(seg1, seg2, E.SEG_LRS, E.SEG_LRS, strategy=BINNED),
-            seg1, seg2, "val", out_col="s",
-        ),
-        "pts_on_seg_binned": lambda: AGG.agg_count(
-            intersect_pairs(seg1, pts, E.SEG_LRS, E.PTS_LRS, strategy=BINNED),
-            seg1, out_col="n",
-        ),
-        "dissolve": lambda: MOD.dissolve(seg1, E.SEG_LRS),
-        "resegment": lambda: MOD.resegment(seg1, E.SEG_LRS, length=7.0, fill="cut"),
-        "distribute": lambda: distribute(
-            intersect_pairs(seg1, pts, E.SEG_LRS, E.PTS_LRS),
-            seg1, pts, E.SEG_LRS, E.PTS_LRS, value_col=None,
-            decay_size=2, decay_func="linear",
-        ),
-        "seg_split": lambda: split_at_locs(
-            seg1, pts, E.SEG_LRS, E.PTS_LRS, inverse_col="six"
-        ),
-        "minhash_lsh": lambda: DD.minhash_lsh_pairs(docs, num_hashes=16, bands=4),
-        "ann_topk": lambda: __import__(
-            "linref_spark.web.ann", fromlist=["x"]
-        ).cosine_topk(emb, emb_queries, k=5),
-        "lsh_topk": lambda: __import__(
-            "linref_spark.web.ann", fromlist=["x"]
-        ).lsh_topk(emb, emb_queries, dim=dim, k=5, n_planes=16, bands=4),
-        "ivfpq_topk": lambda: ANN.ivfpq_topk(
-            emb, emb_queries, dim=dim, k=5, n_centroids=32, n_probe=4,
-            m=8, n_codes=64, rerank_factor=4, centroids=_ivf_C, codebooks=_pq_B,
-        ),
-        "pages_pipeline": f_pages,
-    }
+    return {name: (lambda run=run: capture(run)) for name, run in queries.items()}
 
 
 def main():

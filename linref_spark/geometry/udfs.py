@@ -18,7 +18,7 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -51,6 +51,20 @@ def geom_m_struct(xs: Column, ys: Column, ms: Column) -> Column:
 
 def _np(v) -> np.ndarray:
     return np.asarray(v, dtype=np.float64)
+
+
+def nondeterministic(udf):
+    """Declare a pure UDF nondeterministic, once, where it is defined.
+
+    Every caller of such a UDF filters on its output. Without the flag the
+    optimizer pushes a copy of that filter beneath the projection and the
+    kernel runs twice per row (two ArrowEvalPython nodes). The function is
+    pure; the flag only stops the optimizer duplicating or reordering it.
+    ``asNondeterministic()`` mutates the UDF instance it is called on, so
+    it must never be called on a shared UDF at a call site: that would
+    flip the UDF for every later caller in the session.
+    """
+    return udf.asNondeterministic()
 
 
 @F.pandas_udf(ArrayType(DoubleType()))
@@ -90,6 +104,7 @@ def udf_distance_to_m(
     return pd.Series(out)
 
 
+@nondeterministic
 @F.pandas_udf(DoubleType())
 def udf_locate_point_m(
     xs: pd.Series, ys: pd.Series, ms: pd.Series, px: pd.Series, py: pd.Series
@@ -108,6 +123,7 @@ def udf_locate_point_m(
     return pd.Series(out)
 
 
+@nondeterministic
 @F.pandas_udf(DoubleType())
 def udf_point_line_distance(
     xs: pd.Series, ys: pd.Series, px: pd.Series, py: pd.Series
@@ -256,58 +272,6 @@ def cut_geoms(
     )
 
 
-def project_points(
-    routes: DataFrame,
-    points: DataFrame,
-    route_lrs: LRS,
-    x_col: str = "x",
-    y_col: str = "y",
-    geom_col: str = "geom_m",
-    buffer: Optional[float] = None,
-    nearest: bool = True,
-    loc_col: str = "loc_mp",
-    dist_col: str = "snap_dist",
-) -> DataFrame:
-    """Snap points onto route geometries: per (point, candidate route) pair
-    compute exact distance + projected M, keep the nearest (or all within
-    ``buffer``) — ``LRS_Accessor.project`` (``linref/ext/base.py:3057-3171``).
-
-    This variant broadcasts the (dissolved) route geometry table — the
-    "broadcast dissolved route geometry to executors" strategy; the
-    tile-prefiltered variant for huge route sets lives in
-    :mod:`linref_spark.spatial.join`.
-    """
-    if EVENT_ID not in points.columns:
-        raise ValueError("points need an event_id column")
-    g = F.col(geom_col)
-    cand = points.crossJoin(
-        F.broadcast(routes.select(*route_lrs.key_cols, geom_col))
-    )
-    # asNondeterministic: the buffer filter references the UDF output —
-    # stops the optimizer from evaluating the kernel twice per candidate
-    # (see linref_spark/spatial/join.py snap UDFs)
-    cand = cand.withColumn(
-        dist_col,
-        udf_point_line_distance.asNondeterministic()(
-            g["xs"], g["ys"], F.col(x_col), F.col(y_col)
-        ),
-    )
-    if buffer is not None:
-        cand = cand.where(F.col(dist_col) <= buffer)
-    cand = cand.withColumn(
-        loc_col,
-        udf_locate_point_m(g["xs"], g["ys"], g["ms"], F.col(x_col), F.col(y_col)),
-    )
-    if nearest:
-        w = Window.partitionBy(EVENT_ID).orderBy(
-            F.col(dist_col).asc(), *[F.col(k).asc() for k in route_lrs.key_cols]
-        )
-        cand = cand.withColumn("_rn", F.row_number().over(w)).where(
-            F.col("_rn") == 1
-        ).drop("_rn")
-    return cand.drop(geom_col)
-
-
 def line_merge_groups(
     df: DataFrame,
     lrs: LRS,
@@ -386,6 +350,7 @@ SNAP_TYPE = StructType(
 )
 
 
+@nondeterministic
 @F.pandas_udf(SNAP_TYPE)
 def udf_snap_by_geom(
     geom_key: pd.Series,

@@ -20,7 +20,7 @@ def get_spark(
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(cpus) if str(cpus).isdigit() else 32
+    shuffle = shuffle_partitions or (int(cpus) if str(cpus).isdigit() else 32)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -37,7 +37,8 @@ def get_spark(
         # Arrow batch sizing: the 10k-row default leaves narrow numeric
         # UDF batches overhead-bound (measured ~12% on the snap kernel at
         # 50k rows/batch); the BYTE cap is what bounds worker memory for
-        # fat rows (media blobs), so raising the record cap stays safe.
+        # wide rows (page text, long geometry arrays), so raising the
+        # record cap stays safe.
         # Env-overridable for cluster-specific worker memory budgets.
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",

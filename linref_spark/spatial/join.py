@@ -20,7 +20,7 @@ the tile join only prunes.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -30,11 +30,7 @@ from pyspark.sql.types import ArrayType, BooleanType, DoubleType, StructField, S
 
 from linref_spark.events.frame import global_ordinal_id
 from linref_spark.geometry import kernels as K
-from linref_spark.geometry.udfs import (
-    udf_locate_point_m,
-    udf_point_line_distance,
-    udf_snap_by_geom,
-)
+from linref_spark.geometry.udfs import nondeterministic, udf_snap_by_geom
 from linref_spark.lrs import EVENT_ID, LRS
 from linref_spark.spatial.tiles import with_point_tile, with_polyline_tiles
 
@@ -54,6 +50,54 @@ def _resolve_key_collisions(points: DataFrame, keys: list) -> DataFrame:
     return points
 
 
+def _route_rows(routes: DataFrame, keys: list, geom_col: str) -> DataFrame:
+    """Route ROW identity as ``_route_eid``: a route key may span several
+    geometry rows, and the nearest-row decision needs every row as its own
+    candidate. Uses the route table's event_id when present, else a hash
+    of the keys and the geometry's M values."""
+    if EVENT_ID in routes.columns:
+        return routes.select(F.col(EVENT_ID).alias("_route_eid"), *keys, geom_col)
+    return routes.select(
+        F.xxhash64(*keys, F.col(f"{geom_col}.ms")).alias("_route_eid"),
+        *keys,
+        geom_col,
+    )
+
+
+def _nearest_within(
+    cand: DataFrame,
+    snap,
+    buffer: float,
+    keys: list,
+    nearest: bool,
+    loc_col: str,
+    dist_col: str,
+) -> DataFrame:
+    """Shared snap tail: unpack the (dist, loc_m) snap struct, keep
+    candidates with ``dist <= buffer``, and with ``nearest`` keep the
+    closest route row per point, ties broken by (distance, route keys,
+    route row) — linref's keep-first on its sorted candidates."""
+    cand = (
+        cand.withColumn("_snap", snap)
+        .withColumn(dist_col, F.col("_snap.dist"))
+        .withColumn(loc_col, F.col("_snap.loc_m"))
+        .drop("_snap")
+        .where(F.col(dist_col) <= buffer)
+    )
+    if nearest:
+        w = Window.partitionBy(EVENT_ID).orderBy(
+            F.col(dist_col).asc(),
+            *[F.col(k).asc() for k in keys],
+            F.col("_route_eid").asc(),
+        )
+        cand = (
+            cand.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+    return cand
+
+
 def project_points(
     routes: DataFrame,
     points: DataFrame,
@@ -61,7 +105,13 @@ def project_points(
     buffer: float,
     res: int = 6,
     max_broadcast_routes: int = 200_000,
-    **kw,
+    *,
+    nearest: bool = True,
+    x_col: str = "x",
+    y_col: str = "y",
+    geom_col: str = "geom_m",
+    loc_col: str = "loc_mp",
+    dist_col: str = "snap_dist",
 ) -> DataFrame:
     """Auto-selecting snap: broadcast-geometry when the route table is
     small enough to broadcast, tile-partitioned otherwise.
@@ -74,24 +124,20 @@ def project_points(
     equi-join's bounded fan-out wins — so the dispatch probes the route
     count with a bounded limit(n+1) count (no full scan).
     """
+    opts = dict(
+        res=res, nearest=nearest, x_col=x_col, y_col=y_col,
+        geom_col=geom_col, loc_col=loc_col, dist_col=dist_col,
+    )
     small = (
         routes.limit(max_broadcast_routes + 1).count() <= max_broadcast_routes
     )
     if small:
-        # forward only the kwargs the broadcast kernel accepts
-        # (tiled-only knobs like batch_cluster/broadcast_routes are
-        # meaningless there and would TypeError); the count above already
-        # proved the bound, so skip the kernel's own guard re-count
-        import inspect
-
-        bc_params = inspect.signature(project_points_broadcast).parameters
-        bkw = {k: v for k, v in kw.items() if k in bc_params}
-        bkw.setdefault("max_routes", max_broadcast_routes)
+        # the count above already proved the bound: skip the kernel's own
+        # guard re-count
         return project_points_broadcast(
-            routes, points, route_lrs, buffer, res=res,
-            _skip_route_guard=True, **bkw,
+            routes, points, route_lrs, buffer, _skip_route_guard=True, **opts
         )
-    return project_points_tiled(routes, points, route_lrs, buffer, res=res, **kw)
+    return project_points_tiled(routes, points, route_lrs, buffer, **opts)
 
 
 def project_points_tiled(
@@ -106,8 +152,6 @@ def project_points_tiled(
     geom_col: str = "geom_m",
     loc_col: str = "loc_mp",
     dist_col: str = "snap_dist",
-    broadcast_routes: bool = False,
-    batch_cluster: bool = True,
 ) -> DataFrame:
     """Tile-prefiltered point->route snapping (``project``,
     ``linref/ext/base.py:3057-3171``): candidate (point, route) pairs from a
@@ -116,70 +160,34 @@ def project_points_tiled(
     point with deterministic tie-break (distance, then route keys — linref's
     keep-first on its sorted candidates).
 
-    Unlike :func:`linref_spark.geometry.udfs.project_points` (broadcast),
-    this scales to route tables too large to broadcast: the shuffle key is
-    the tile id, and candidate fan-out is bounded by tile occupancy.
+    Unlike :func:`project_points_broadcast`, this scales to route tables
+    too large to broadcast: the shuffle key is the tile id, and candidate
+    fan-out is bounded by tile occupancy.
     """
     if EVENT_ID not in points.columns:
         raise ValueError("points need an event_id column")
     keys = list(route_lrs.key_cols)
     points = _resolve_key_collisions(points, keys)
-    # route ROW identity (a route key may span several geometry rows; the
-    # nearest-row decision needs every row as its own candidate)
-    if EVENT_ID in routes.columns:
-        rsel = routes.select(
-            F.col(EVENT_ID).alias("_route_eid"), *keys, geom_col
-        )
-    else:
-        rsel = routes.select(
-            F.xxhash64(*keys, F.col(f"{geom_col}.ms")).alias("_route_eid"),
-            *keys,
-            geom_col,
-        )
-    rt = with_polyline_tiles(rsel, geom_col, res=res, buffer=buffer)
-    if broadcast_routes:
-        # the north-star scale path: broadcast the (dissolved) route
-        # geometry tiles to executors -> map-side join, zero shuffle
-        rt = F.broadcast(rt)
+    rt = with_polyline_tiles(
+        _route_rows(routes, keys, geom_col), geom_col, res=res, buffer=buffer
+    )
     pt = with_point_tile(points, x_col, y_col, res=res)
     # each point owns exactly ONE tile and a route's cover lists each tile
     # once, so the join cannot duplicate (point, route-row) pairs — no
     # dedupe shuffle needed
     cand = pt.join(rt, on="tile_id", how="inner").drop("tile_id")
-    if batch_cluster and not broadcast_routes:
-        # cluster candidates of the same geometry into the same Arrow batches
-        # so the fused snap UDF vectorizes per geometry (points x segments);
-        # skipped on the broadcast path to stay shuffle-free (the UDF still
-        # groups within each batch)
-        cand = cand.repartition(F.col("_route_eid")).sortWithinPartitions("_route_eid")
+    # cluster candidates of the same geometry into the same Arrow batches
+    # so the fused snap UDF vectorizes per geometry (points x segments)
+    cand = cand.repartition(F.col("_route_eid")).sortWithinPartitions("_route_eid")
     g = F.col(geom_col)
-    # asNondeterministic (guide on duplicated UDF evaluation): the
-    # dist<=buffer filter below references the UDF's output column, and the
-    # optimizer otherwise pushes a copy of the filter BELOW the projection,
-    # evaluating the snap kernel twice per candidate row (two
-    # ArrowEvalPython nodes in the plan). The function is pure; the flag
-    # only forbids the optimizer from duplicating/reordering it.
-    snap = udf_snap_by_geom.asNondeterministic()(
+    snap = udf_snap_by_geom(
         F.col("_route_eid"), g["xs"], g["ys"], g["ms"], F.col(x_col), F.col(y_col)
     )
-    cand = cand.withColumn("_snap", snap)
-    cand = cand.withColumn(dist_col, F.col("_snap.dist")).withColumn(
-        loc_col, F.col("_snap.loc_m")
-    ).drop("_snap").where(F.col(dist_col) <= buffer)
-    if nearest:
-        w = Window.partitionBy(EVENT_ID).orderBy(
-            F.col(dist_col).asc(),
-            *[F.col(k).asc() for k in keys],
-            F.col("_route_eid").asc(),
-        )
-        cand = (
-            cand.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+    cand = _nearest_within(cand, snap, buffer, keys, nearest, loc_col, dist_col)
     return cand.drop(geom_col, "_route_eid")
 
 
+@nondeterministic
 @F.pandas_udf(XY_LIST_TYPE)
 def udf_segment_intersections(
     xs1: pd.Series, ys1: pd.Series, xs2: pd.Series, ys2: pd.Series
@@ -239,14 +247,8 @@ def intersection_pairs(
         cand = cand.where(~same)
     cand = cand.dropDuplicates(["left_id", "right_id"])
     lg, rg = F.col("_lg"), F.col("_rg")
-    # asNondeterministic: the size(points)>0 filter references the UDF
-    # output — stops the optimizer from evaluating the intersection kernel
-    # twice per candidate pair (see the snap UDFs above)
     cand = cand.withColumn(
-        "points",
-        udf_segment_intersections.asNondeterministic()(
-            lg["xs"], lg["ys"], rg["xs"], rg["ys"]
-        ),
+        "points", udf_segment_intersections(lg["xs"], lg["ys"], rg["xs"], rg["ys"])
     )
     return cand.where(F.size("points") > 0).select("left_id", "right_id", "points")
 
@@ -281,6 +283,7 @@ def intersection_nodes(
     return nodes.drop("_qx", "_qy")
 
 
+@nondeterministic
 @F.pandas_udf(BooleanType())
 def udf_point_in_polygon(
     px: pd.Series, py: pd.Series, poly_x: pd.Series, poly_y: pd.Series
@@ -325,14 +328,8 @@ def clip_points(
         & (F.col(y_col) >= miny)
         & (F.col(y_col) <= maxy)
     )
-    # asNondeterministic: the keep-filter references this UDF-derived
-    # column; without the flag the optimizer duplicates the ray-cast UDF
-    # below the pushed filter (same pattern as the snap UDFs above)
     inside = F.when(
-        bbox,
-        udf_point_in_polygon.asNondeterministic()(
-            F.col(x_col), F.col(y_col), px, py
-        ),
+        bbox, udf_point_in_polygon(F.col(x_col), F.col(y_col), px, py)
     ).otherwise(F.lit(False))
     marked = points.withColumn("_inside", inside)
     cond = F.col("_inside") if keep == "inside" else ~F.col("_inside")
@@ -372,16 +369,7 @@ def project_points_broadcast(
         raise ValueError("points need an event_id column")
     keys = list(route_lrs.key_cols)
     points = _resolve_key_collisions(points, keys)
-    if EVENT_ID in routes.columns:
-        rsel = routes.select(
-            F.col(EVENT_ID).alias("_route_eid"), *keys, geom_col
-        )
-    else:
-        rsel = routes.select(
-            F.xxhash64(*keys, F.col(f"{geom_col}.ms")).alias("_route_eid"),
-            *keys,
-            geom_col,
-        )
+    rsel = _route_rows(routes, keys, geom_col)
     # _skip_route_guard: the project_points dispatcher already counted the
     # route table under the same bound — don't re-run its lineage
     if not _skip_route_guard and rsel.limit(max_routes + 1).count() > max_routes:
@@ -403,6 +391,8 @@ def project_points_broadcast(
         }
     )
 
+    # nondeterministic: measured ~1.4x on the pages_pipeline snap leg
+    @nondeterministic
     @F.pandas_udf(
         StructType(
             [StructField("dist", DoubleType()), StructField("loc_m", DoubleType())]
@@ -432,30 +422,6 @@ def project_points_broadcast(
     )
     pt = with_point_tile(points, x_col, y_col, res=res)
     cand = pt.join(F.broadcast(rt), on="tile_id", how="inner").drop("tile_id")
-    # asNondeterministic: without it the dist<=buffer filter below is pushed
-    # beneath the projection as a COPY, and every candidate row pays the
-    # snap kernel twice (two ArrowEvalPython nodes). Pure function; the
-    # flag only stops the optimizer duplicating it. Measured ~1.4x on the
-    # pages_pipeline snap leg.
-    snap = udf_snap_bc.asNondeterministic()(
-        F.col("_route_eid"), F.col(x_col), F.col(y_col)
-    )
-    cand = (
-        cand.withColumn("_snap", snap)
-        .withColumn(dist_col, F.col("_snap.dist"))
-        .withColumn(loc_col, F.col("_snap.loc_m"))
-        .drop("_snap")
-        .where(F.col(dist_col) <= buffer)
-    )
-    if nearest:
-        w = Window.partitionBy(EVENT_ID).orderBy(
-            F.col(dist_col).asc(),
-            *[F.col(k).asc() for k in keys],
-            F.col("_route_eid").asc(),
-        )
-        cand = (
-            cand.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+    snap = udf_snap_bc(F.col("_route_eid"), F.col(x_col), F.col(y_col))
+    cand = _nearest_within(cand, snap, buffer, keys, nearest, loc_col, dist_col)
     return cand.drop("_route_eid")

@@ -366,8 +366,7 @@ def parallel_project_samples(
 
     hits = sp.join(tt, on="tile_id").drop("tile_id")
     tg = F.col("_tg")
-    # asNondeterministic: same duplicated-UDF-under-pushed-filter hazard
-    snap = udf_snap_by_geom.asNondeterministic()(
+    snap = udf_snap_by_geom(
         F.col("_tid"), tg["xs"], tg["ys"], tg["ms"], F.col("_sx"), F.col("_sy")
     )
     hits = hits.withColumn("_d", snap["dist"]).where(F.col("_d") <= buffer)

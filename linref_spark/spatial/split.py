@@ -32,10 +32,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linref_spark.events.constrain import split_at_locs
-from linref_spark.geometry.udfs import cut_geoms, udf_interpolate_m, udf_locate_point_m
+from linref_spark.geometry.udfs import (
+    XY_TYPE,
+    cut_geoms,
+    nondeterministic,
+    udf_interpolate_m,
+    udf_locate_point_m,
+    udf_point_line_distance,
+)
 from linref_spark.lrs import EVENT_ID, LRS
 from linref_spark.spatial.join import udf_point_in_polygon, udf_segment_intersections
 from linref_spark.spatial.tiles import polyline_cover_kernel, with_polyline_tiles
+
+# clip's keep-filter reads the midpoint, so it needs a nondeterministic
+# instance; a separate one, because the shared udf_interpolate_m is also
+# used deterministically
+_udf_interpolate_m_nd = nondeterministic(F.pandas_udf(udf_interpolate_m.func, XY_TYPE))
 
 
 def _close_ring(xs: Sequence[float], ys: Sequence[float]):
@@ -114,12 +126,9 @@ def split_at_geometry(
     # --- exact intersection points against the broadcast mask ---------------
     cand = cand.join(F.broadcast(_mask_df(spark, mask_xs, mask_ys)))
     g = F.col(geom_col)
-    # asNondeterministic on every UDF whose output feeds a filter below:
-    # the optimizer otherwise pushes a copy of the filter beneath the
-    # projection and evaluates the kernel twice per row (spatial/join.py)
     pts = cand.withColumn(
         "_pts",
-        udf_segment_intersections.asNondeterministic()(
+        udf_segment_intersections(
             g["xs"], g["ys"], F.col("mask_xs"), F.col("mask_ys")
         ),
     ).where(F.size("_pts") > 0)
@@ -128,7 +137,7 @@ def split_at_geometry(
     locs = pts.select(EVENT_ID, *keys, geom_col, F.explode("_pts").alias("_p"))
     locs = locs.withColumn(
         "loc",
-        udf_locate_point_m.asNondeterministic()(
+        udf_locate_point_m(
             g["xs"], g["ys"], g["ms"], F.col("_p.x"), F.col("_p.y")
         ),
     ).select(*keys, "loc").where(F.col("loc").isNotNull()).distinct()
@@ -202,23 +211,15 @@ def clip_events(
     test = pieces.join(src, on=F.col("split_index") == F.col("_src")).drop("_src")
     sg = F.col("_sg")
     mid_m = (F.col(lrs.beg_col) + F.col(lrs.end_col)) / 2.0
-    # asNondeterministic: the keep-filter below references columns derived
-    # from these three UDFs — without the flag the pushed filter would
-    # re-evaluate the whole midpoint/ray-cast/ring-distance chain per row
     test = test.withColumn(
-        "_mid",
-        udf_interpolate_m.asNondeterministic()(
-            sg["xs"], sg["ys"], sg["ms"], mid_m
-        ),
+        "_mid", _udf_interpolate_m_nd(sg["xs"], sg["ys"], sg["ms"], mid_m)
     ).drop("_sg")
     test = test.join(F.broadcast(_mask_df(df.sparkSession, rx, ry)))
-    inside_raw = udf_point_in_polygon.asNondeterministic()(
+    inside_raw = udf_point_in_polygon(
         F.col("_mid.x"), F.col("_mid.y"), F.col("mask_xs"), F.col("mask_ys")
     )
     # distance from midpoint to the ring resolves boundary-running pieces
-    from linref_spark.geometry.udfs import udf_point_line_distance
-
-    ring_d = udf_point_line_distance.asNondeterministic()(
+    ring_d = udf_point_line_distance(
         F.col("mask_xs"), F.col("mask_ys"), F.col("_mid.x"), F.col("_mid.y")
     )
     test = test.withColumn("_in_raw", inside_raw).withColumn("_ring_d", ring_d)

@@ -12,18 +12,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from linref_spark.geometry import kernels as K
+from linref_spark.geometry.direction import with_bearing
 from linref_spark.geometry.udfs import (
     add_geom_m,
     cut_geoms,
     extract_m_values,
+    generate_linear_events,
     geom_m_struct,
     line_merge_groups,
-    project_points,
     udf_geom_m_to_wkt,
     udf_wkt_to_geom_m,
 )
 from linref_spark.events.frame import add_event_id
 from linref_spark.lrs import LRS
+from linref_spark.spatial.join import project_points
 
 
 # --- pure kernels -------------------------------------------------------------
@@ -138,7 +140,7 @@ def test_project_points_fixture(spark, roads):
         [(1, 5.0, 0.05, "High"), (2, 15.0, 0.02, "Low"), (3, 7.0, 10.1, "Medium")],
         ["event_id", "x", "y", "severity"],
     )
-    out = project_points(roads, pts, ROADS_LRS, nearest=True)
+    out = project_points(roads, pts, ROADS_LRS, buffer=1.0, nearest=True)
     got = {r.event_id: (r.route, r.loc_mp) for r in out.collect()}
     assert got[1][0] == "US-101" and got[1][1] == pytest.approx(5.0)
     assert got[2][0] == "US-101" and got[2][1] == pytest.approx(15.0)
@@ -410,3 +412,42 @@ def test_geopandas_gate_both_branches(spark):
     assert sorted(back["name"]) == ["a", "b"]
     assert str(back.crs) == "EPSG:4326"
     assert back.geometry.iloc[0].length > 0
+
+
+def test_bearing_direction(spark):
+    rows_ = [
+        (0, [0.0, 10.0], [0.0, 0.0]),     # east
+        (1, [0.0, 0.0], [0.0, 5.0]),      # north
+        (2, [0.0, -4.0], [0.0, 0.0]),     # west
+        (3, [0.0, 1.0], [0.0, -9.0]),     # ~south
+    ]
+    df = spark.createDataFrame(rows_, ["i", "xs", "ys"]).select(
+        "i", F.struct("xs", "ys").alias("geom_m")
+    )
+    out = {r.i: (r.bearing, r.direction) for r in with_bearing(df).collect()}
+    assert out[0] == (0.0, "E")
+    assert out[1] == (90.0, "N")
+    assert out[2] == (180.0, "W")
+    assert out[3][1] == "S"
+
+
+def test_generate_linear_events(spark):
+    # group R: two contiguous parts given out of order + one disjoint part
+    rows_ = [
+        ("R", [3.0, 7.0], [0.0, 0.0]),   # second in chain (len 4)
+        ("R", [0.0, 3.0], [0.0, 0.0]),   # first in chain (len 3)
+        ("R", [50.0, 52.0], [5.0, 5.0]),  # disjoint chain (len 2)
+    ]
+    df = spark.createDataFrame(rows_, ["route", "geom_xs", "geom_ys"])
+    lrs = LRS(key_cols=("route",), beg_col="beg", end_col="end")
+    df = add_event_id(df, order_by=["route", "geom_xs"])
+    out = generate_linear_events(df, lrs, scale=2.0)
+    got = {tuple(r.geom_xs): (r.beg, r.end, r.chain) for r in out.collect()}
+    # merge order: part(0-3) then part(3-7) chain 0, then disjoint chain 1;
+    # measures are a global cumsum x scale (ext/base.py:1443-1446)
+    assert got[(0.0, 3.0)] == (0.0, 6.0, 0.0)
+    assert got[(3.0, 7.0)] == (6.0, 14.0, 0.0)
+    assert got[(50.0, 52.0)] == (14.0, 18.0, 1.0)
+    # M geometry endpoints match the generated bounds
+    ms = {tuple(r.geom_xs): list(r.geom_m.ms) for r in out.collect()}
+    assert ms[(0.0, 3.0)] == [0.0, 6.0]

@@ -164,7 +164,10 @@ def test_project_points_broadcast_matches_tiled(spark, roads):
 
 def test_project_points_auto_selects_by_route_count(spark, roads):
     """The auto dispatcher must pick the broadcast kernel under the
-    threshold and the tiled kernel above it, with identical results."""
+    threshold and the tiled kernel above it, with identical results; it
+    rejects unknown keywords, and the facade passes its column names
+    through."""
+    from linref_spark.frame import LinrefFrame
     from linref_spark.spatial.join import project_points
 
     pts = spark.createDataFrame(
@@ -181,3 +184,12 @@ def test_project_points_auto_selects_by_route_count(spark, roads):
     kb = sorted((r["event_id"], r["route"], round(r["snap_dist"], 9),
                  round(r["loc_mp"], 9)) for r in b.collect())
     assert ka == kb and len(ka) > 0
+    with pytest.raises(TypeError, match="bufer"):
+        project_points(roads, pts, ROADS_LRS, 1.0, res=6, bufer=1.0)
+    renamed = pts.withColumnRenamed("x", "px").withColumnRenamed("y", "py")
+    c = LinrefFrame(roads, ROADS_LRS).project(
+        renamed, buffer=1.0, res=6, x_col="px", y_col="py"
+    )
+    kc = sorted((r["event_id"], r["route"], round(r["snap_dist"], 9),
+                 round(r["loc_mp"], 9)) for r in c.collect())
+    assert kc == ka

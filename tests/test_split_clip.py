@@ -132,3 +132,15 @@ def test_clip_within_excludes_boundary_running(spark):
     wit = clip_events(df, lrs, POLY_X, POLY_Y, keep="inside", predicate="within")
     assert cov.count() >= 1
     assert wit.count() == 0
+
+
+def test_clip_leaves_shared_interpolate_udf_deterministic(spark, roads3):
+    # clip needs a nondeterministic midpoint UDF; it must not get one by
+    # flipping the shared udf_interpolate_m, which other callers use as a
+    # deterministic expression
+    from linref_spark.geometry.udfs import udf_interpolate_m
+
+    clip_events(roads3, LRS3, POLY_X, POLY_Y).count()
+    g = F.col("geom_m")
+    probe = roads3.select(udf_interpolate_m(g["xs"], g["ys"], g["ms"], F.col("beg")))
+    assert probe._jdf.queryExecution().analyzed().deterministic()
