@@ -17,7 +17,8 @@ Semantics:
 - ``Pipeline.run`` executes stages in order; a stage is SKIPPED when the
   manifest holds a committed entry whose *input fingerprints* match the
   current upstream fingerprints (transitive: editing stage 2 re-runs 3..n
-  but not 1);
+  but not 1); a stage's fingerprint also covers its version and, when it
+  declares ``bucket_by``, its bucket spec;
 - each committed entry records: fingerprint, input fingerprints, row
   count, wall seconds, bytes written, and per-partition row counts
   (lineage + skew evidence: max/mean partition ratio).
@@ -247,6 +248,12 @@ class Pipeline:
         self.provider = provider or make_provider(
             format, base_dir, bucket_specs=bucket_specs, **provider_kwargs
         )
+        if bucket_specs and not isinstance(self.provider, ParquetProvider):
+            raise ValueError(
+                f"Stages {sorted(bucket_specs)} declare bucket_by, but bucketing "
+                "needs the parquet provider (format='parquet'); got "
+                f"{type(self.provider).__name__}. Drop bucket_by or use parquet."
+            )
         names = [s.name for s in stages]
         if len(set(names)) != len(names):
             raise ValueError("Stage names must be unique")
@@ -270,10 +277,13 @@ class Pipeline:
         os.replace(tmp, self._manifest_path())
 
     def _fingerprint(self, stage: Stage, input_fps: Dict[str, str]) -> str:
-        payload = json.dumps(
-            {"name": stage.name, "version": stage.version, "inputs": input_fps},
-            sort_keys=True,
-        )
+        spec = {"name": stage.name, "version": stage.version, "inputs": input_fps}
+        if stage.bucket_by:
+            # the on-disk layout is part of the output: a changed bucket
+            # spec must recompute, never re-register stale bucket files
+            spec["bucket_by"] = list(stage.bucket_by)
+            spec["n_buckets"] = int(stage.n_buckets)
+        payload = json.dumps(spec, sort_keys=True)
         return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
     # -- execution ------------------------------------------------------------

@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import SparkSession
 
+from linref_spark import session
 from linref_spark.lrs import EVENT_ID, LRS
 
 
@@ -23,6 +24,7 @@ def spark():
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(session.CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     yield s

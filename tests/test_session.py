@@ -1,4 +1,4 @@
-"""get_spark configuration: shuffle-partition sizing."""
+"""get_spark configuration: shuffle-partition sizing, codegen cache."""
 
 from __future__ import annotations
 
@@ -41,3 +41,10 @@ def test_shuffle_partitions(monkeypatch, cpus, explicit, expected):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
     conf = S.get_spark(master="local[1]", shuffle_partitions=explicit)
     assert conf["spark.sql.shuffle.partitions"] == expected
+
+
+def test_codegen_cache_sized_to_working_set(monkeypatch):
+    # a static conf: it only takes effect if set on the builder
+    monkeypatch.setattr(S, "SparkSession", SimpleNamespace(builder=_Builder()))
+    conf = S.get_spark(master="local[1]")
+    assert conf["spark.sql.codegen.cache.maxEntries"] == str(S.CODEGEN_CACHE_ENTRIES)
