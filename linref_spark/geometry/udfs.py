@@ -29,6 +29,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from linref_spark import pyworker
 from linref_spark.geometry import kernels as K
 from linref_spark.lrs import EVENT_ID, LRS
 
@@ -67,7 +68,7 @@ def nondeterministic(udf):
     return udf.asNondeterministic()
 
 
-@F.pandas_udf(ArrayType(DoubleType()))
+@pyworker.pandas_udf(ArrayType(DoubleType()))
 def udf_set_m_from_bounds(
     xs: pd.Series, ys: pd.Series, beg: pd.Series, end: pd.Series
 ) -> pd.Series:
@@ -80,7 +81,7 @@ def udf_set_m_from_bounds(
     return pd.Series(out)
 
 
-@F.pandas_udf(DoubleType())
+@pyworker.pandas_udf(DoubleType())
 def udf_m_to_distance(
     xs: pd.Series, ys: pd.Series, ms: pd.Series, m: pd.Series
 ) -> pd.Series:
@@ -92,7 +93,7 @@ def udf_m_to_distance(
     return pd.Series(out)
 
 
-@F.pandas_udf(DoubleType())
+@pyworker.pandas_udf(DoubleType())
 def udf_distance_to_m(
     xs: pd.Series, ys: pd.Series, ms: pd.Series, dist: pd.Series
 ) -> pd.Series:
@@ -105,7 +106,7 @@ def udf_distance_to_m(
 
 
 @nondeterministic
-@F.pandas_udf(DoubleType())
+@pyworker.pandas_udf(DoubleType())
 def udf_locate_point_m(
     xs: pd.Series, ys: pd.Series, ms: pd.Series, px: pd.Series, py: pd.Series
 ) -> pd.Series:
@@ -124,7 +125,7 @@ def udf_locate_point_m(
 
 
 @nondeterministic
-@F.pandas_udf(DoubleType())
+@pyworker.pandas_udf(DoubleType())
 def udf_point_line_distance(
     xs: pd.Series, ys: pd.Series, px: pd.Series, py: pd.Series
 ) -> pd.Series:
@@ -136,7 +137,7 @@ def udf_point_line_distance(
     return pd.Series(out)
 
 
-@F.pandas_udf(XY_TYPE)
+@pyworker.pandas_udf(XY_TYPE)
 def udf_interpolate_m(
     xs: pd.Series, ys: pd.Series, ms: pd.Series, m: pd.Series
 ) -> pd.DataFrame:
@@ -152,7 +153,7 @@ def udf_interpolate_m(
     return pd.DataFrame({"x": outx, "y": outy})
 
 
-@F.pandas_udf(GEOM_M_TYPE)
+@pyworker.pandas_udf(GEOM_M_TYPE)
 def udf_cut_m(
     xs: pd.Series, ys: pd.Series, ms: pd.Series, beg: pd.Series, end: pd.Series
 ) -> pd.DataFrame:
@@ -170,7 +171,7 @@ def udf_cut_m(
     return pd.DataFrame({"xs": oxs, "ys": oys, "ms": oms})
 
 
-@F.pandas_udf(StringType())
+@pyworker.pandas_udf(StringType())
 def udf_geom_m_to_wkt(xs: pd.Series, ys: pd.Series, ms: pd.Series) -> pd.Series:
     out = []
     for x, y, mm in zip(xs, ys, ms):
@@ -178,7 +179,7 @@ def udf_geom_m_to_wkt(xs: pd.Series, ys: pd.Series, ms: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@F.pandas_udf(BinaryType())
+@pyworker.pandas_udf(BinaryType())
 def udf_geom_m_to_wkb(xs: pd.Series, ys: pd.Series, ms: pd.Series) -> pd.Series:
     """ISO WKB LINESTRING M (little-endian) — binary interchange for the
     geom_m struct (kernels.to_wkb_m)."""
@@ -188,7 +189,7 @@ def udf_geom_m_to_wkb(xs: pd.Series, ys: pd.Series, ms: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@F.pandas_udf(GEOM_M_TYPE)
+@pyworker.pandas_udf(GEOM_M_TYPE)
 def udf_wkb_to_geom_m(wkb: pd.Series) -> pd.DataFrame:
     """Parse WKB LINESTRING M bytes (ISO 2002 / EWKB M-flag / plain 2-D)
     into the geom_m struct — the shapely-free ingestion path closing the
@@ -208,7 +209,7 @@ def udf_wkb_to_geom_m(wkb: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"xs": oxs, "ys": oys, "ms": oms})
 
 
-@F.pandas_udf(GEOM_M_TYPE)
+@pyworker.pandas_udf(GEOM_M_TYPE)
 def udf_wkt_to_geom_m(wkt: pd.Series) -> pd.DataFrame:
     """Unparseable text surfaces as a NULL struct (same untrusted-input
     contract as :func:`udf_wkb_to_geom_m`)."""
@@ -319,7 +320,7 @@ def line_merge_groups(
             rows.append(row)
         return pd.DataFrame(rows)
 
-    return df.groupBy(*keys).applyInPandas(merge_fn, schema)
+    return df.groupBy(*keys).applyInPandas(pyworker.pandas_fn(merge_fn), schema)
 
 
 def get_chains(
@@ -342,7 +343,7 @@ def get_chains(
         pdf[out_col] = [float(c) for c in chains]
         return pdf
 
-    return df.groupBy(*keys).applyInPandas(chain_fn, schema)
+    return df.groupBy(*keys).applyInPandas(pyworker.pandas_fn(chain_fn), schema)
 
 
 SNAP_TYPE = StructType(
@@ -351,7 +352,7 @@ SNAP_TYPE = StructType(
 
 
 @nondeterministic
-@F.pandas_udf(SNAP_TYPE)
+@pyworker.pandas_udf(SNAP_TYPE)
 def udf_snap_by_geom(
     geom_key: pd.Series,
     xs: pd.Series,
@@ -443,7 +444,7 @@ def generate_linear_events(
         pdf[chain_col] = [float(c) for c in chains]
         return pdf
 
-    out = df.groupBy(*keys).applyInPandas(gen, schema)
+    out = df.groupBy(*keys).applyInPandas(pyworker.pandas_fn(gen), schema)
     if add_geom:
         glrs = LRS(key_cols=tuple(keys), beg_col=beg_col, end_col=end_col)
         out = add_geom_m(out, glrs, xs_col=xs_col, ys_col=ys_col, out_col=geom_col)

@@ -33,6 +33,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import shutil
 import time
 from dataclasses import dataclass, field
@@ -42,6 +43,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "_manifest.json"
+# a bucketed data file's name ends in its bucket id, as Spark's
+# BucketingUtils.getBucketId reads it: part-...-<uuid>_00003.c000.snappy.parquet
+_BUCKET_ID = re.compile(r".*_(\d+)(?:\..*)?$")
 
 
 @dataclass
@@ -77,6 +81,27 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+def _check_bucket_ids(path: str, n_buckets: int) -> None:
+    """Raise unless every data file under ``path`` names a bucket id below
+    ``n_buckets``. A bucketed scan reads only buckets ``0..n_buckets-1``, so
+    registering files written with more buckets (or without bucketing)
+    would silently drop the rows in the others."""
+    bad = []
+    for f in sorted(os.listdir(path)):
+        if f.startswith(("_", ".")):  # _SUCCESS, .crc checksums
+            continue
+        m = _BUCKET_ID.match(f)
+        if m is None or int(m.group(1)) >= n_buckets:
+            bad.append(f)
+    if bad:
+        raise ValueError(
+            f"{path} holds {len(bad)} data file(s) without a bucket id below "
+            f"n_buckets={n_buckets} (first: {bad[0]}): the directory was "
+            "written with another bucket spec. Recompute the stage, or set "
+            "n_buckets to the count it was written with."
+        )
+
+
 class ParquetProvider:
     """Atomic-rename parquet directories under ``base_dir``.
 
@@ -102,8 +127,6 @@ class ParquetProvider:
         # the session catalog only allows [A-Za-z0-9_] in relation names
         # (quoting does not help), so sanitize the stage name and append a
         # short hash of the RAW name — 'a-b' and 'a_b' must not collide
-        import re
-
         tag = hashlib.sha256(self.base_dir.encode()).hexdigest()[:8]
         safe = re.sub(r"[^A-Za-z0-9_]", "_", name)
         ntag = hashlib.sha256(name.encode()).hexdigest()[:4]
@@ -120,6 +143,7 @@ class ParquetProvider:
         registration that omitted SORTED BY would silently re-sort every
         bucket in downstream sort-merge joins after a session restart."""
         cols, n = self.bucket_specs[name]
+        _check_bucket_ids(self._dir(name), n)
         tbl = self._table(name)
         schema = spark.read.parquet(self._dir(name)).schema
         col_ddl = ", ".join(

@@ -284,6 +284,16 @@ def _resolve_auto_cached(
     return resolved
 
 
+def clear_auto_cache() -> None:
+    """Forget every memoized auto resolution, so the next ``auto`` call on
+    any frame pair probes its inputs again.
+
+    Call it after overwriting data under a path that was already related in
+    this session: see :func:`resolve_auto` for why the memo can be stale.
+    """
+    _AUTO_CACHE.clear()
+
+
 def resolve_auto(
     left: DataFrame,
     right: DataFrame,
@@ -297,7 +307,13 @@ def resolve_auto(
     defeats the memo — every call mints a fresh plan — while probing the
     stable SOURCE layers both hits the cache on repeat calls and measures
     the same group structure. Any resolution is correct (strategy shapes
-    the physical plan only)."""
+    the physical plan only).
+
+    The memo lives as long as the Python process and keys on the plans, not
+    on the data: after the same path is overwritten, a read of it has the
+    same plan, so the memo returns the strategy probed from the old files.
+    Results stay right; only the plan may fit the new data badly.
+    :func:`clear_auto_cache` drops the memo."""
     if strategy.kind != "auto":
         return strategy
     lnarrow = _narrow(left, llrs, "l", False)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BooleanType, DoubleType, StructField, StructType
 
+from linref_spark import pyworker
 from linref_spark.events.frame import global_ordinal_id
 from linref_spark.geometry import kernels as K
 from linref_spark.geometry.udfs import nondeterministic, udf_snap_by_geom
@@ -188,7 +189,7 @@ def project_points_tiled(
 
 
 @nondeterministic
-@F.pandas_udf(XY_LIST_TYPE)
+@pyworker.pandas_udf(XY_LIST_TYPE)
 def udf_segment_intersections(
     xs1: pd.Series, ys1: pd.Series, xs2: pd.Series, ys2: pd.Series
 ) -> pd.Series:
@@ -284,7 +285,7 @@ def intersection_nodes(
 
 
 @nondeterministic
-@F.pandas_udf(BooleanType())
+@pyworker.pandas_udf(BooleanType())
 def udf_point_in_polygon(
     px: pd.Series, py: pd.Series, poly_x: pd.Series, poly_y: pd.Series
 ) -> pd.Series:
@@ -393,7 +394,7 @@ def project_points_broadcast(
 
     # nondeterministic: measured ~1.4x on the pages_pipeline snap leg
     @nondeterministic
-    @F.pandas_udf(
+    @pyworker.pandas_udf(
         StructType(
             [StructField("dist", DoubleType()), StructField("loc_m", DoubleType())]
         )

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
+from linref_spark import pyworker
 from linref_spark.geometry import kernels as K
 from linref_spark.geometry.udfs import udf_snap_by_geom
 from linref_spark.lrs import EVENT_ID, LRS
@@ -43,7 +44,7 @@ MATCH_TYPE = StructType(
 
 
 def _make_match_udf(densify):
-    @F.pandas_udf(MATCH_TYPE)
+    @pyworker.pandas_udf(MATCH_TYPE)
     def udf_match(
         tid: pd.Series,
         txs: pd.Series, tys: pd.Series, tms: pd.Series,
@@ -276,7 +277,7 @@ SAMPLES_TYPE = ArrayType(
 def _make_samples_udf(samples: int):
     fracs = np.linspace(0.0, 1.0, samples)
 
-    @F.pandas_udf(SAMPLES_TYPE)
+    @pyworker.pandas_udf(SAMPLES_TYPE)
     def _samples(xs: pd.Series, ys: pd.Series) -> pd.Series:
         out = []
         for x, y in zip(xs, ys):

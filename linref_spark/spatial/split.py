@@ -31,6 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linref_spark import pyworker
 from linref_spark.events.constrain import split_at_locs
 from linref_spark.geometry.udfs import (
     XY_TYPE,
@@ -46,8 +47,11 @@ from linref_spark.spatial.tiles import polyline_cover_kernel, with_polyline_tile
 
 # clip's keep-filter reads the midpoint, so it needs a nondeterministic
 # instance; a separate one, because the shared udf_interpolate_m is also
-# used deterministically
-_udf_interpolate_m_nd = nondeterministic(F.pandas_udf(udf_interpolate_m.func, XY_TYPE))
+# used deterministically. ``.func.__wrapped__`` is the plain function
+# under the shared UDF's pyworker entry wrapper.
+_udf_interpolate_m_nd = nondeterministic(
+    pyworker.pandas_udf(XY_TYPE)(udf_interpolate_m.func.__wrapped__)
+)
 
 
 def _close_ring(xs: Sequence[float], ys: Sequence[float]):

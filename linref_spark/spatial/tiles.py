@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from linref_spark import pyworker
+
 BASE_SIZE = 4096.0
 _BIAS = 1 << 28
 _MASK29 = (1 << 29) - 1
@@ -190,7 +192,7 @@ def polyline_cover_kernel(
 
 
 def make_cover_udf(res: int, buffer: float):
-    @F.pandas_udf(ArrayType(LongType()))
+    @pyworker.pandas_udf(ArrayType(LongType()))
     def _cover(xs: pd.Series, ys: pd.Series) -> pd.Series:
         out = []
         for x, y in zip(xs, ys):

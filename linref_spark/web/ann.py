@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from linref_spark import pyworker
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -171,7 +173,7 @@ def make_lsh_bands_udf(dim: int, bands: int, rows_per_band: int, seed: int = 42)
     planes = _hyperplanes(dim, n_planes, seed)  # shipped in the task closure
     weights = (1 << np.arange(rows_per_band, dtype=np.int64))
 
-    @F.pandas_udf(ArrayType(LongType()))
+    @pyworker.pandas_udf(ArrayType(LongType()))
     def _bands(v: pd.Series) -> pd.Series:
         n = len(v)
         X = np.zeros((n, dim), dtype=np.float64)
@@ -459,7 +461,7 @@ def make_ivf_assign_udf(centroids: np.ndarray, n_probe: int = 1):
     k, dim = C.shape
     n_probe = min(n_probe, k)
 
-    @F.pandas_udf(ArrayType(LongType()))
+    @pyworker.pandas_udf(ArrayType(LongType()))
     def _assign(v: pd.Series) -> pd.Series:
         n = len(v)
         X = np.zeros((n, dim), dtype=np.float64)
@@ -623,7 +625,7 @@ def with_pq_codes(
     dim = m * sub
     norms2 = (books**2).sum(axis=2)  # (m, n_codes)
 
-    @F.pandas_udf(ArrayType(LongType()))
+    @pyworker.pandas_udf(ArrayType(LongType()))
     def _encode(v: pd.Series) -> pd.Series:
         n = len(v)
         X = np.zeros((n, dim), dtype=np.float64)
@@ -740,7 +742,7 @@ def pq_topk(
         ).astype(np.float32)
         b_lut = spark.sparkContext.broadcast((qids[p0:p1], lut))
         scorer = _make_adc_scorer(b_lut, R, mm, has_cid=False)
-        parts.append(coded.mapInPandas(scorer, _ADC_PARTIAL_SCHEMA))
+        parts.append(coded.mapInPandas(pyworker.pandas_fn(scorer), _ADC_PARTIAL_SCHEMA))
     if not parts:  # every query vector was null
         parts = [spark.createDataFrame([], _ADC_PARTIAL_SCHEMA)]
     partials = reduce(DataFrame.unionAll, parts)
@@ -1008,7 +1010,7 @@ def ivfpq_topk(
             (qids[p0:p1], lut, allowed[p0:p1])
         )
         scorer = _make_adc_scorer(b_state, R, mm, has_cid=True)
-        parts.append(coded.mapInPandas(scorer, _ADC_PARTIAL_SCHEMA))
+        parts.append(coded.mapInPandas(pyworker.pandas_fn(scorer), _ADC_PARTIAL_SCHEMA))
     if not parts:  # every query vector was null
         parts = [spark.createDataFrame([], _ADC_PARTIAL_SCHEMA)]
     partials = reduce(DataFrame.unionAll, parts)

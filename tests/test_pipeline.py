@@ -290,6 +290,34 @@ def test_pipeline_bucket_spec_change_recomputes(spark, tmp_path):
     assert "resume from checkpoint" in lines2b[0] and n2b == 400
 
 
+def test_register_rejects_bucket_ids_beyond_spec(spark, tmp_path):
+    """A directory written with more buckets than the provider's spec must
+    not be registered: the bucketed scan reads only buckets below
+    n_buckets, so it would silently return fewer rows."""
+    from linref_spark.pipeline.checkpoint import ParquetProvider
+
+    base = str(tmp_path / "ids")
+
+    def s_big(spark, _):
+        return spark.range(400).select(
+            (F.col("id") % 8).cast("string").alias("route"),
+            F.col("id").alias("event_id"),
+        )
+
+    pipe = Pipeline(base, [Stage("big", s_big, bucket_by=("route",),
+                                 n_buckets=4)])
+    pipe.run(spark)
+    # written outside this provider: a fresh session has no catalog entry
+    spark.sql(f"DROP TABLE IF EXISTS `{pipe.provider._table('big')}`")
+    narrow = ParquetProvider(base, {"big": (("route",), 2)})
+    with pytest.raises(ValueError, match="Recompute the stage, or set n_buckets"):
+        narrow.read(spark, "big")
+    # the matching spec still registers and reads every row
+    same = ParquetProvider(base, {"big": (("route",), 4)})
+    assert same.read(spark, "big").count() == 400
+    spark.sql(f"DROP TABLE IF EXISTS `{same._table('big')}`")
+
+
 def test_pipeline_refuses_bucket_by_without_parquet_provider(tmp_path):
     stage = Stage("a", lambda s, _: s.range(3).toDF("x"), bucket_by=("x",))
     with pytest.raises(ValueError, match="bucketing needs the parquet provider"):

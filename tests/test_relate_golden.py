@@ -480,3 +480,39 @@ def test_auto_probe_memoized_per_input_pair(spark, monkeypatch):
     for _ in range(3):
         intersect_pairs(left, left, llrs, llrs, strategy=J.AUTO).count()
     assert calls["n"] == 1
+
+
+def test_clear_auto_cache_forces_a_new_probe(spark):
+    """The auto-strategy memo answers a repeated frame pair without a stats
+    probe; clear_auto_cache() empties it, so the next auto call probes the
+    inputs again (the hook for paths overwritten within a session)."""
+    from linref_spark.relate.join import (
+        AUTO,
+        _AUTO_CACHE,
+        clear_auto_cache,
+        resolve_auto,
+    )
+
+    left, llrs = make_events(
+        spark, begs=[0, 5, 40], ends=[10, 15, 41], groups=[7, 7, 8],
+        closed="left",
+    )
+    sc = spark.sparkContext
+
+    def probe_jobs(tag):
+        sc.setJobGroup(tag, tag)
+        try:
+            resolve_auto(left, left, llrs, llrs, AUTO)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    clear_auto_cache()
+    assert len(_AUTO_CACHE) == 0
+    assert probe_jobs("auto-first") > 0
+    assert len(_AUTO_CACHE) == 1
+    assert probe_jobs("auto-memo") == 0
+    clear_auto_cache()
+    assert len(_AUTO_CACHE) == 0
+    assert probe_jobs("auto-cleared") > 0
+    assert len(_AUTO_CACHE) == 1
